@@ -23,10 +23,16 @@ watermark = MAX(GREATEST(...)) recompute    → max(change_ts) from the
 per-table try/except, summary, exit code    → RunReport with per-table
                                               error isolation
 
-Scale notes: tables at the same FK depth replicate concurrently
-(driver threads submitting independent Spark jobs — the reference is
-strictly serial); the merge is the only wide operation, and its delta
-side is typically small enough for AQE to broadcast. Target storage here is
+Scale notes: every table of a run stages concurrently — delta read,
+merge, stats and the parquet write to a temp directory, on driver
+threads submitting independent Spark jobs (the reference is strictly
+serial). Only the publish — the directory swap plus the watermark
+upsert — follows FK order: a table swaps in after each FK parent earlier
+in the load order has published or finished without a write (empty
+delta, no PK, failed), so a reader never sees a child ahead of its
+changed parent and a failed parent does not block its children. The
+merge is the only wide operation, and its delta side is typically small
+enough for AQE to broadcast. Target storage here is
 plain parquet with an atomic directory swap per table; at 100 TB the
 same `merge_soft_delete` plugs into Delta/Iceberg `MERGE INTO` via
 `foreachBatch` without changing semantics (SURVEY.md §7 "what's built-in
@@ -35,10 +41,12 @@ vs custom").
 
 from __future__ import annotations
 
+import logging
 import os
 import shutil
 import uuid
-from concurrent.futures import ThreadPoolExecutor
+from collections.abc import Callable
+from concurrent.futures import Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,7 +61,11 @@ from oracle_to_oracle_data_integration_pipeline_spark.operators.cdc import (
 )
 from oracle_to_oracle_data_integration_pipeline_spark.operators.watermark import WatermarkStore
 from oracle_to_oracle_data_integration_pipeline_spark.plans.schema_tools import validate_cdc_columns
-from oracle_to_oracle_data_integration_pipeline_spark.plans.topo import topo_depths, topo_sort_tables
+# topo_depths is not called here; it stays a module attribute because
+# tracing tools wrap this module's functions by name.
+from oracle_to_oracle_data_integration_pipeline_spark.plans.topo import topo_depths, topo_sort_tables  # noqa: F401
+
+log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -109,15 +121,21 @@ class ParquetTargetStore:
     ``CdcPipeline.replicate_table`` across its whole read→merge→swap,
     so concurrent mutators serialize on the full critical section, not
     just the rename window; the lock is thread-reentrant so the nested
-    acquisition here is free). A failed swap restores the previous
-    version. Readers are not locked: between the two renames the path
-    is briefly missing (ENOENT) — retry; atomic dir exchange needs
-    renameat2(RENAME_EXCHANGE) or a table-format metadata commit.
+    acquisition here is free). Between the write and the renames,
+    ``before_swap(table)`` runs when set: ``CdcPipeline.run`` uses it to
+    hold the swap until the table's FK parents have published, so the
+    lock is also held across that wait (other tables' locks are never
+    taken, so the wait cannot deadlock on a lock). A failed swap
+    restores the previous version. Readers are not locked: between the
+    two renames the path is briefly missing (ENOENT) — retry; atomic dir
+    exchange needs renameat2(RENAME_EXCHANGE) or a table-format metadata
+    commit.
     """
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
+        self.before_swap: Callable[[str], None] | None = None
         os.makedirs(root, exist_ok=True)
 
     def path(self, table: str) -> str:
@@ -138,6 +156,8 @@ class ParquetTargetStore:
         tmp = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
         with table_write_lock(final):
             df.write.mode("overwrite").parquet(tmp)
+            if self.before_swap is not None:
+                self.before_swap(table)
             old = f"{final}.old-{uuid.uuid4().hex[:8]}"
             if os.path.exists(final):
                 os.rename(final, old)
@@ -202,6 +222,10 @@ class CdcPipeline:
             try:
                 if delta.isEmpty():  # cheap gate, not a full count()
                     return TableResult(table, "empty_delta")
+                # The new watermark, read while staging rather than after
+                # the swap: FK children wait on this table's publish
+                # (swap, then upsert), so it runs no Spark job.
+                max_ts = delta.agg(F.max(change_ts_col()).alias("m")).collect()[0]["m"]
 
                 delta_clean = latest_per_key(delta, pk)
                 # The table lock covers the whole read→merge→swap: a
@@ -237,7 +261,6 @@ class CdcPipeline:
 
                 # Watermark advance only after a successful write
                 # (at-least-once protocol, 03_cdc_etl.py:324-334).
-                max_ts = delta.agg(F.max(change_ts_col()).alias("m")).collect()[0]["m"]
                 if max_ts is not None:
                     self.watermarks.upsert(table, max_ts)
                 return TableResult(
@@ -250,6 +273,7 @@ class CdcPipeline:
             finally:
                 delta.unpersist()
         except Exception as exc:  # per-table isolation (03_cdc_etl.py:348-352)
+            log.exception("replication of table %s failed", table)
             return TableResult(table, "failed", error=f"{type(exc).__name__}: {exc}")
 
     # -- full run ------------------------------------------------------
@@ -266,14 +290,31 @@ class CdcPipeline:
                 report.results.append(self.replicate_table(t))
             return report
 
-        # Depth waves: tables in a wave have no FK relation → replicate
-        # concurrently (engine improvement over the serial reference).
-        depths = topo_depths(tables, edges)
-        by_depth: dict[int, list[str]] = {}
-        for t in load_order:
-            by_depth.setdefault(depths[t], []).append(t)
-        with ThreadPoolExecutor(max_workers=self.max_parallel_tables) as pool:
-            for depth in sorted(by_depth):
-                for res in pool.map(self.replicate_table, by_depth[depth]):
-                    report.results.append(res)
+        # Concurrent staging, FK-ordered publish: every table runs
+        # replicate_table at once; only the swap inside target.overwrite
+        # waits for the table's FK parents earlier in load_order to
+        # return, whatever their status, so a failed parent never blocks
+        # a child. Workers take tables in submission order, so a parent
+        # waited on has already started and waits only on tables earlier
+        # still: no deadlock, cycle leftovers included (their back edges
+        # point later and are ignored).
+        pos = {t: i for i, t in enumerate(load_order)}
+        parents: dict[str, set[str]] = {t: set() for t in load_order}
+        for p, c in edges:
+            if p in pos and c in pos and pos[p] < pos[c]:
+                parents[c].add(p)
+        futures: dict[str, Future] = {}
+
+        def await_parents(table: str) -> None:
+            wait([futures[p] for p in parents.get(table, ())])
+
+        self.target.before_swap = await_parents
+        try:
+            with ThreadPoolExecutor(max_workers=self.max_parallel_tables) as pool:
+                # a loop, not a comprehension: workers read the dict as it fills
+                for t in load_order:
+                    futures[t] = pool.submit(self.replicate_table, t)
+        finally:
+            self.target.before_swap = None
+        report.results = [futures[t].result() for t in load_order]
         return report

@@ -11,10 +11,11 @@ Engine refinements over the reference:
 - deterministic output (lexicographic tie-break among ready tables) so
   runs and tests are reproducible;
 - ``depth`` levels exposed — tables at the same depth have no FK
-  dependency between them and can be replicated concurrently (the
-  reference runs strictly serially; SURVEY.md §4 notes the parallelism
-  opportunity). Driver-side control flow only; catalog-scale data, so
-  plain Python is the right tool — no Spark job involved.
+  dependency between them. The pipeline itself stages every table
+  concurrently and orders only the publish by FK (plans/pipeline.py;
+  the reference runs strictly serially, SURVEY.md §4). Driver-side
+  control flow only; catalog-scale data, so plain Python is the right
+  tool — no Spark job involved.
 """
 
 from __future__ import annotations

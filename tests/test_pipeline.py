@@ -6,6 +6,7 @@ semantics (`/root/reference/scripts/03_cdc_etl.py:238-379`)."""
 from __future__ import annotations
 
 import datetime
+import threading
 
 import pytest
 from pyspark.sql import types as T
@@ -136,19 +137,124 @@ def test_replay_idempotent(spark, tmp_path):
     assert target_map(pipe) == before
 
 
-def test_parallel_waves_match_serial(spark, tmp_path):
+class RecordingStore(ParquetTargetStore):
+    """Logs each table's staged write and its swap, in the order they
+    happen. ``holds`` maps a table to another whose staged write it
+    waits for before swapping; the wait is timed, so a pipeline that
+    does not stage concurrently fails instead of hanging."""
+
+    def __init__(self, spark, root, tables, holds):
+        self.log: list[tuple[str, str]] = []
+        self.holds = holds
+        self.staged = {t: threading.Event() for t in tables}
+        super().__init__(spark, root)
+
+    @property
+    def before_swap(self):
+        gate = self._gate
+        if gate is None:
+            return None
+
+        def hook(table):
+            self.log.append(("staged", table))
+            self.staged[table].set()
+            if table in self.holds:
+                assert self.staged[self.holds[table]].wait(120), f"{table} held forever"
+            gate(table)
+
+        return hook
+
+    @before_swap.setter
+    def before_swap(self, gate):
+        self._gate = gate
+
+    def overwrite(self, table, df):
+        super().overwrite(table, df)
+        self.log.append(("swapped", table))
+
+
+def fk_catalog(spark, names, edges):
     cat = Catalog(spark)
-    for i, name in enumerate(["p_parent", "c_child", "x_other"]):
-        cat.put(
-            name,
-            spark.createDataFrame([(i, name, T1, None, "N")], SCHEMA),
-            pk=["id"],
-        )
-    cat._fk_edges = [("p_parent", "c_child")]
+    for i, name in enumerate(names):
+        cat.put(name, spark.createDataFrame([(i, name, T1, None, "N")], SCHEMA), pk=["id"])
+    cat._fk_edges = edges
+    return cat
+
+
+def run_bounded(pipe, seconds=240):
+    """``pipe.run()`` on a thread, failing the test if it has not
+    returned within ``seconds`` (a hung publish wait)."""
+    out = {}
+    worker = threading.Thread(target=lambda: out.update(rep=pipe.run()), daemon=True)
+    worker.start()
+    worker.join(seconds)
+    assert not worker.is_alive(), "run() did not return"
+    return out["rep"]
+
+
+def test_concurrent_staging_publishes_in_fk_order(spark, tmp_path):
+    chain = ["a_parent", "b_child", "c_grandchild"]
+    names = chain + ["a_other"]  # independent of the chain
+    edges = [("a_parent", "b_child"), ("b_child", "c_grandchild")]
+    cat = fk_catalog(spark, names, edges)
+    # a_other swaps only once a_parent has staged, and a_parent only
+    # once its child has staged: with 2 workers both holds resolve only
+    # if staging runs concurrently and just the swap follows FK order
+    target = RecordingStore(spark, f"{tmp_path}/target", names,
+                            holds={"a_other": "a_parent", "a_parent": "b_child"})
+    wm = WatermarkStore(spark, f"{tmp_path}/wm")
+    rep = CdcPipeline(spark, cat, target, wm, max_parallel_tables=2).run(parallel=True)
+
+    # results stay in load order (lexicographic among ready tables)
+    assert [r.table for r in rep.results] == ["a_other", "a_parent", "b_child", "c_grandchild"]
+    assert {r.status for r in rep.results} == {"replicated"}, rep.results
+    log = target.log
+    for parent, child in edges:
+        assert log.index(("swapped", parent)) < log.index(("swapped", child))
+    assert log.index(("staged", "b_child")) < log.index(("swapped", "a_parent"))
+    assert log.index(("staged", "a_parent")) < log.index(("swapped", "a_other"))
+    assert target.before_swap is None  # the gate does not outlive run()
+    assert {t: wm.get(t) for t in names} == dict.fromkeys(names, T1)
+
+    serial_cat = fk_catalog(spark, names, edges)
+    serial = CdcPipeline(
+        spark, serial_cat, ParquetTargetStore(spark, f"{tmp_path}/serial"),
+        WatermarkStore(spark, f"{tmp_path}/serial_wm"), max_parallel_tables=2,
+    ).run(parallel=False)
+    assert serial.results == rep.results
+
+
+def test_failed_parent_does_not_block_child(spark, tmp_path):
+    cat = fk_catalog(spark, ["t1"], [("bad_parent", "t1")])
+    cat.put("bad_parent", spark.createDataFrame([(1, "x")], "id long, val string"), pk=["id"])
     target = ParquetTargetStore(spark, f"{tmp_path}/target")
     wm = WatermarkStore(spark, f"{tmp_path}/wm")
-    pipe = CdcPipeline(spark, cat, target, wm, max_parallel_tables=3)
-    rep = pipe.run(parallel=True)
-    assert sorted(r.table for r in rep.results if r.status == "replicated") == [
-        "c_child", "p_parent", "x_other",
+    rep = run_bounded(CdcPipeline(spark, cat, target, wm, max_parallel_tables=2))
+    assert [(r.table, r.status) for r in rep.results] == [
+        ("bad_parent", "failed"), ("t1", "replicated"),
+    ]
+    assert rep.results[0].error.startswith("ValueError")  # the string the CLI prints
+    assert wm.get("t1") == T1 and wm.get("bad_parent") is None
+
+
+def test_failure_is_logged_with_traceback(spark, tmp_path, caplog):
+    cat, pipe = build(spark, tmp_path, [(1, "a", T1, None, "N")])
+    cat.put("bad_table", spark.createDataFrame([(1, "x")], "id long, val string"), pk=["id"])
+    with caplog.at_level("ERROR", logger="oracle_to_oracle_data_integration_pipeline_spark.plans.pipeline"):
+        rep = pipe.run()
+    assert rep.failed == ["bad_table"]
+    [rec] = [r for r in caplog.records if "bad_table" in r.getMessage()]
+    assert rec.exc_info is not None and rec.exc_info[0] is ValueError
+
+
+def test_fk_cycle_leftovers_do_not_deadlock(spark, tmp_path):
+    names = ["root", "y_cyc", "x_cyc"]
+    edges = [("root", "x_cyc"), ("x_cyc", "y_cyc"), ("y_cyc", "x_cyc")]
+    cat = fk_catalog(spark, names, edges)
+    target = ParquetTargetStore(spark, f"{tmp_path}/target")
+    wm = WatermarkStore(spark, f"{tmp_path}/wm")
+    rep = run_bounded(CdcPipeline(spark, cat, target, wm, max_parallel_tables=2))
+    # cycle members are appended after the ordered tables, in name order
+    assert [(r.table, r.status) for r in rep.results] == [
+        ("root", "replicated"), ("x_cyc", "replicated"), ("y_cyc", "replicated"),
     ]
